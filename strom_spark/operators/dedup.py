@@ -293,17 +293,24 @@ class NgramJaccardPairs(Component):
 
 
 class MinHashLSHPairs(Component):
-    """MinHash + banded LSH near-dup pairs, verified by exact Jaccard.
+    """MinHash + banded LSH near-dup pairs, verified by exact Jaccard
+    over HASHED shingle sets.
 
-    Signature: for seed i in 0..num_hashes-1, sig_i = min over shingles
-    of md5(i || '|' || shingle) — min over hex strings (lexicographic =
-    uniform order on the hash space).  Bands of ``rows_per_band``
-    concatenated signatures become bucket keys; only same-bucket pairs
-    are candidates (sub-quadratic).  Candidates then verified with the
-    exact Jaccard join restricted to candidate ids, so the output has
-    no false positives; recall is the standard LSH S-curve
-    (32 hashes / 16 bands × 2 rows -> P(catch | j=0.8) ≈ 1-(1-0.64)^16
-    ≈ 0.9999).
+    Each doc's k-word shingles are hashed once to xxhash64 longs and
+    deduplicated; the signatures and the verify join both work on those
+    hashed sets.  "Exact" Jaccard means no sampling error, not
+    string-exact: two distinct shingles that collide in 64 bits count
+    as one, which can move a pair sitting right at the threshold
+    across it.
+
+    Signature: for seed i in 0..num_hashes-1, sig_i = min over hashed
+    shingles h of (a_i*h' + b_i) mod (2^31-1), h' = pmod(h, 2^31-1).
+    Bands of ``rows_per_band`` signatures become bucket keys; only
+    same-bucket pairs are candidates (sub-quadratic).  Candidates are
+    then verified with the Jaccard join restricted to candidate ids, so
+    the output has no false positives; recall is the standard LSH
+    S-curve (32 hashes / 16 bands × 2 rows -> P(catch | j=0.8) ≈
+    1-(1-0.64)^16 ≈ 0.9999).
 
     **Auto banding (r12 — the CosineLSHJoin auto-sizing discipline,
     similarity.py).**  ``rows_per_band=None`` resolves (rows, bands)
@@ -407,11 +414,6 @@ class MinHashLSHPairs(Component):
         )
         self.target_partition_docs = int(target_partition_docs)
         self.label = label
-
-    #: persist the (id, shingle-hash set) frame on the PINNED path too
-    #: (r15; A/B hook for tools/r15_minhash_ab.py --pin) — see the
-    #: history note in transform()
-    _PERSIST_PINNED = True
 
     def _resolve(self) -> tuple[int, int]:
         """(num_hashes, rows_per_band) with the auto (None) defaults
@@ -558,17 +560,11 @@ class MinHashLSHPairs(Component):
         # persist so one materialization feeds all consumers instead of
         # running tokenization 3x / a composed upstream 4x; tracked for
         # strom_spark.release_caches() (LRU-evictable until then —
-        # CosineLSHJoin discipline).
-        # History: r14 tried extending the persist to the PINNED path
-        # and REVERTED (pinned dedup_minhash_clusters 2.6 s → 3.7 s at
-        # sf0.1 — the lazy cache WRITE of array<string> shingles, the
-        # widest frame in the plan, landed on the first consumer's
-        # critical path).  r15's int64 shingle sets shrink that frame
-        # 3-4×, which flips the trade: re-measured via the pinned-arm
-        # A/B (plans/r15/minhash_pin_ab.jsonl, _PERSIST_PINNED is the
-        # A/B hook), the persist now wins on the pinned path too.
-        if auto or self._PERSIST_PINNED:
-            doc_sh = doc_sh.persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+        # CosineLSHJoin discipline).  Persisted on the pinned path too:
+        # in the interleaved A/B (plans/r15/minhash_pin_ab.jsonl) the
+        # persist wins cold and loses warm on int64 shingle sets, an
+        # open trade to settle on a measured workload.
+        doc_sh = doc_sh.persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
         if auto:
             n_docs = doc_sh.count()
             n_part = min(
@@ -708,7 +704,9 @@ class MinHashDedup(Component):
     graph: one ``(id, keep_id)`` row per distinct input doc,
     ``keep_id`` = the minimum doc id of the doc's connected component
     in the exact-Jaccard >= threshold graph.  Docs in no near-dup pair
-    keep themselves.
+    keep themselves.  As in :class:`MinHashLSHPairs`, that Jaccard is
+    computed over xxhash64-hashed shingle sets, so a 64-bit shingle
+    collision can move a pair at the threshold (and with it a merge).
 
     Precision contrast with :class:`SimHashDedup`: that operator
     merges components of the *bucket* graph (a pigeonhole superset —
@@ -1259,21 +1257,18 @@ class EmbeddingNearDupPairs(Component):
         return reduce(lambda a, b: a.unionAll(b), parts)
 
     def _join(self, df: DataFrame) -> DataFrame:
-        # one ~free probe job selects the unrolled codegen fast path
-        # for the quadratic pair dot (and hoists the normalize's norm
-        # out of the per-element lambda); ragged rows fall back to the
-        # HOF form per the vectors.dot size guard — bit-identical
-        dim = V.probe_dim(df, self.vec_col)
+        # hoisted-norm normalize: the norm is computed once per row,
+        # not once per element inside the transform lambda
         normed = V.l2_normalize_select(
             df.select(F.col(self.id_col).alias("id"),
                       F.col(self.vec_col).alias("__rv")),
-            "id", "__rv", "v", dim=dim,
+            "id", "__rv", "v",
         )
         a, b = normed.alias("a"), normed.alias("b")
         return (
             a.join(b, F.col("a.id") < F.col("b.id"))
             .withColumn(
-                "cosine", F.round(V.dot(F.col("a.v"), F.col("b.v"), dim=dim), 6)
+                "cosine", F.round(V.dot(F.col("a.v"), F.col("b.v")), 6)
             )
             .filter(F.col("cosine") >= self.threshold)
             .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"), "cosine")
@@ -2200,17 +2195,13 @@ class SemDeDup(Component):
         rows = slim.orderBy("id").limit(k).collect()
         if not rows:
             raise ValueError("SemDeDup: input has no vectors")
-        # dim from the collected pivots (no probe job); hoisted-norm
-        # normalize — the one-expression l2_normalize re-evaluates the
-        # norm fold per ELEMENT, O(dim²) interpreted per row.  The
-        # pivot dots stay HOF folds: an unrolled chain embeds the pivot
-        # floats as literals, so every k-pivot set compiles fresh
-        # k×dim-term Janino methods (measured 1.7 s → 6.4 s at sf0.1,
-        # the LloydKMeans lesson).
-        dim = V.maybe_dim(
-            len(rows[0]["v"]) if rows[0]["v"] is not None else None
-        )
-        normed = V.l2_normalize_select(slim, "id", "v", "nv", dim=dim)
+        # hoisted-norm normalize — the one-expression l2_normalize
+        # re-evaluates the norm fold per ELEMENT, O(dim²) interpreted
+        # per row.  The pivot dots stay HOF folds: an unrolled chain
+        # embeds the pivot floats as literals, so every k-pivot set
+        # compiles fresh k×dim-term Janino methods (measured 1.7 s →
+        # 6.4 s at sf0.1, the LloydKMeans lesson).
+        normed = V.l2_normalize_select(slim, "id", "v", "nv")
         cands = []
         for r in rows:
             p = np.asarray(r["v"], dtype="float64")

@@ -451,13 +451,6 @@ class TriangleCount(Component):
     (bigint exact, or double estimate under ``edge_sample``).
     """
 
-    #: closure strategy: "adj" (r15 adjacency-intersect, default) or
-    #: "wedge" (pre-r15 wedge self-join + closure equi-join) — both
-    #: compute the identical integer credit multiset; the wedge arm is
-    #: kept for the interleaved A/B (tools/r15_triangle_ab.py) and the
-    #: bit-identity test.
-    _CLOSURE = "adj"
-
     def __init__(
         self,
         input: str,
@@ -585,56 +578,12 @@ class TriangleCount(Component):
         fwd = (F.col("du") < F.col("dv")) | (
             (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
         )
-        # db is no longer carried on the default path: the r15
-        # adjacency-intersect closure needs only the oriented (a, b)
-        # pair — narrower persist.  The wedge arm still needs db for
-        # its (deg, id) wedge ordering.
+        # the adjacency-intersect closure below needs only the oriented
+        # (a, b) pair
         ori = withdeg.select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-            *(
-                []
-                if self._CLOSURE == "adj"
-                else [F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db")]
-            ),
         ).persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
-
-        if self._CLOSURE == "wedge":
-            # pre-r15 closure, kept selectable for interleaved A/B and
-            # the adj≡wedge bit-identity test: (deg, id)-ordered wedge
-            # self-join + (x, y) closure equi-join.  Produces the same
-            # integer credit multiset as the adjacency intersect.
-            e1, e2 = ori.alias("e1"), ori.alias("e2")
-            wedges = e1.join(
-                e2,
-                (F.col("e1.a") == F.col("e2.a"))
-                & (
-                    (F.col("e1.db") < F.col("e2.db"))
-                    | (
-                        (F.col("e1.db") == F.col("e2.db"))
-                        & (F.col("e1.b") < F.col("e2.b"))
-                    )
-                ),
-            ).select(
-                F.col("e1.a").alias("apex"),
-                F.col("e1.b").alias("x"),
-                F.col("e2.b").alias("y"),
-            )
-            closing = ori.select(F.col("a").alias("x"), F.col("b").alias("y"))
-            tris = wedges.join(closing, ["x", "y"])
-            counts = (
-                tris.select(
-                    F.explode(F.array("apex", "x", "y")).alias(self.node_col)
-                )
-                .groupBy(self.node_col)
-                .agg(F.count(F.lit(1)).cast("bigint").alias(self.count_col))
-            )
-            if self.edge_sample is not None and self.edge_sample < 1.0:
-                counts = counts.withColumn(
-                    self.count_col,
-                    F.col(self.count_col) / F.lit(float(self.edge_sample) ** 3),
-                )
-            return flow.without(self.input).with_stream(self.output, counts)
 
         # r15 (guide §2.3, verdict #1): ADJACENCY-INTERSECT instead of
         # the wedge self-join + closure equi-join.  The old shape

@@ -15,7 +15,9 @@ Two paths:
     verified with the exact dot product.  Approximate recall (tunable
     via tables × bits), exact precision.
 
-Both compute similarity with JVM higher-order functions — no Python.
+Per-pair scores come from JVM higher-order-function folds or from
+vectorized numpy kernels (``mapInArrow``/``mapInPandas``); each
+operator documents how its scores compare with the SQL oracle.
 """
 
 from __future__ import annotations
@@ -35,11 +37,14 @@ from ..io import spread as _io_spread
 
 import weakref
 
-#: k-means training memo, scoped to a corpus DataFrame OBJECT (r15):
-#: ivf_index_search trains IVFIndex and the in-memory IVFTopK off the
-#: same frame in one build — identical seeded training, two sample
-#: jobs.  Weak keys mean the entry dies with the frame; a fresh
-#: DataFrame per bench run guarantees nothing survives across runs.
+#: k-means training memo, keyed on the corpus DataFrame's OBJECT
+#: IDENTITY (r15), not on its data or source path: ivf_index_search
+#: trains IVFIndex and the in-memory IVFTopK off the same frame in one
+#: build — identical seeded training, two sample jobs.  It assumes the
+#: frame's source is immutable: if the files under a frame change and
+#: the SAME object is trained again, the stale centroids are returned.
+#: Weak keys mean the entry dies with the frame; a fresh DataFrame per
+#: bench run guarantees nothing survives across runs.
 _TRAIN_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -52,6 +57,15 @@ class CosineTopK(Component):
     rows — small enough to broadcast.  Output: (query_id, neighbor_id,
     cosine, rank) with rank 1..k, self-matches excluded, deterministic
     tie-break on neighbor id.
+
+    Within the broadcast bound the corpus×query scan is one vectorized
+    ``mapInArrow`` pass against the collected query matrix (fold-ordered
+    dots, bit-identical to the JVM fold).  It keeps the JVM
+    broadcast-join scan when an id type has no Arrow mapping or the
+    query tile's rows × longest-dim × 8 bytes exceed
+    ``STROM_SPARK_ARROW_TILE_MAX_BYTES``; above the bound the queries
+    are hash-tiled through the JVM scan (or rejected,
+    ``on_overflow='error'``).
     """
 
     def __init__(
@@ -94,13 +108,6 @@ class CosineTopK(Component):
             F.col(self.vec_col).cast("array<double>").alias("__qv"),
             V.norm(F.col(self.vec_col).cast("array<double>")).alias("__qn"),
         ).localCheckpoint(eager=True)
-        # dim probe off the checkpointed queries (one ~free job, only
-        # when STROM_SPARK_UNROLL_DIM=1): at production pair volumes the
-        # per-pair dot/norm then unroll into codegen'd chains instead of
-        # interpreted HOF folds — ~2× per pair, bit-identical via the
-        # size-guarded fallback (see vectors.maybe_dim for the measured
-        # compile-cost crossover that keeps this opt-in)
-        dim = V.probe_dim(queries, "__qv")
         # Norms are precomputed ONCE per row (scalar next to the raw
         # vector) and the per-pair cosine is dot/(qn*cn) — the exact
         # double sequence DuckDB's list_cosine_similarity evaluates, so
@@ -110,7 +117,7 @@ class CosineTopK(Component):
         corpus = flow[self.input].select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(self.vec_col).cast("array<double>").alias("__cv"),
-            V.norm(F.col(self.vec_col).cast("array<double>"), dim=dim).alias("__cn"),
+            V.norm(F.col(self.vec_col).cast("array<double>")).alias("__cn"),
         )
 
         def scan(qtile):
@@ -119,7 +126,7 @@ class CosineTopK(Component):
                 .withColumn(
                     "cosine",
                     F.round(
-                        V.dot("__qv", "__cv", dim=dim)
+                        V.dot("__qv", "__cv")
                         / (F.col("__qn") * F.col("__cn")),
                         6,
                     ),
@@ -143,12 +150,8 @@ class CosineTopK(Component):
             # fold-ordered numpy dots are bit-identical to the JVM HOF
             # fold at a fraction of its interpreted per-element cost.
             # Falls back to the JVM broadcast-join scan on unmapped id
-            # types or STROM_SPARK_ARROW_PAIRS=0.
-            sims = (
-                self._scan_arrow(corpus, queries, n_q)
-                if V.arrow_pairs_enabled()
-                else None
-            )
+            # types or a tile over the byte cap.
+            sims = self._scan_arrow(corpus, queries, n_q)
             if sims is None:
                 sims = scan(queries)
         elif self.on_overflow == "error":
@@ -195,8 +198,9 @@ class CosineTopK(Component):
         round stay in the JVM — so cosines cannot move by one bit.
         Ragged corpus batches and malformed query rows take a per-row
         Python fold that replicates ``zip_with`` null semantics.
-        Returns None when an id type has no Arrow mapping (caller
-        keeps the JVM broadcast-join scan)."""
+        Returns None when an id type has no Arrow mapping or the tile
+        is over the byte cap (caller keeps the JVM broadcast-join
+        scan)."""
         import numpy as np
         import pyarrow as pa
 
@@ -207,14 +211,14 @@ class CosineTopK(Component):
             return None
         # BYTE guard (r15, verdict #9): the row guard alone lets a
         # high-dim tile blow the driver — rows × dim × 8 is the real
-        # footprint.  Probe one row's dim off the checkpointed frame
-        # (a ~free job) and bail to the JVM broadcast scan when the
-        # estimated matrix exceeds the cap; under the cap, ONE collect
-        # of the slim (id, vec, norm) projection is bounded by
-        # construction.
-        r0 = queries.select(F.size("__qv").alias("__d")).first()
-        d_probe = int(r0["__d"]) if r0 is not None and r0["__d"] is not None else 0
-        if n_q * max(d_probe, 1) * 8 > V.arrow_tile_max_bytes():
+        # footprint.  Take the LONGEST query vector off the checkpointed
+        # frame (one ~free job; a ragged tile is sized by its widest
+        # row, not whichever row comes first) and bail to the JVM
+        # broadcast scan when the estimated matrix exceeds the cap;
+        # under the cap, ONE collect of the slim (id, vec, norm)
+        # projection is bounded by construction.
+        d_max = queries.agg(F.max(F.size("__qv"))).first()[0]
+        if n_q * max(d_max or 0, 1) * 8 > V.arrow_tile_max_bytes():
             return None
         rows = queries.collect()  # bounded by the byte guard above
         good, bad = [], []
@@ -496,13 +500,10 @@ class IVFTopK(Component):
                     }
                 )
 
-        # centroid matrix fixes the vector dim — unrolled codegen
-        # dot/norm with the ragged-row guard, no probe job needed
-        dim = V.maybe_dim(int(C.shape[1]))
         assigned = slim.mapInPandas(
             assign,
             schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
-        ).withColumn("nn", V.norm("nv", dim=dim))
+        ).withColumn("nn", V.norm("nv"))
 
         probe_df = _probe_assign(
             flow[self.queries], C, n_probe, self.id_col, self.vec_col
@@ -510,7 +511,7 @@ class IVFTopK(Component):
         joined = _probe_join(
             assigned, probe_df, self.max_broadcast_rows
         ).filter(F.col("query_id") != F.col("neighbor_id"))
-        sims = _rerank_cosine(joined, dim)
+        sims = _rerank_cosine(joined)
         w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
         out = sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= self.k)
         return flow.without(self.input, self.queries).with_stream(self.output, out)
@@ -670,11 +671,11 @@ def _probe_assign(
 
     out = slim.mapInPandas(
         probe, schema=f"query_id {id_type}, centroid_id int, qv array<double>"
-    ).withColumn("qn", V.norm("qv", dim=V.maybe_dim(int(C.shape[1]))))
+    ).withColumn("qn", V.norm("qv"))
     return out.localCheckpoint(eager=True)
 
 
-def _rerank_cosine(joined: DataFrame, dim: int | None) -> DataFrame:
+def _rerank_cosine(joined: DataFrame) -> DataFrame:
     """Exact cosine rerank of a probe-join pair frame carrying
     (query_id, neighbor_id, qv, nv, qn, nn) — the JVM HOF fold.
 
@@ -690,7 +691,7 @@ def _rerank_cosine(joined: DataFrame, dim: int | None) -> DataFrame:
     JVM expression."""
     return joined.withColumn(
         "cosine",
-        F.round(V.dot("qv", "nv", dim=dim) / (F.col("qn") * F.col("nn")), 6),
+        F.round(V.dot("qv", "nv") / (F.col("qn") * F.col("nn")), 6),
     ).select("query_id", "neighbor_id", "cosine")
 
 
@@ -739,17 +740,15 @@ def ivf_search(
     needed = sorted(
         r.centroid_id for r in probe_df.select("centroid_id").distinct().collect()
     )
-    dim = V.maybe_dim(int(C.shape[1]))
     index = (
         spark.read.parquet(index_path)
         .filter(F.col("centroid_id").isin(needed))
-        .withColumn("nn", V.norm("nv", dim=dim))
+        .withColumn("nn", V.norm("nv"))
     )
     sims = _rerank_cosine(
         _probe_join(index, probe_df, max_broadcast_rows).filter(
             F.col("query_id") != F.col("neighbor_id")
-        ),
-        dim,
+        )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     out = sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -983,15 +982,13 @@ class CosineLSHJoin(Component):
                 self.dim, n_tables * bits_per_table
             )
         else:
-            # dim is a constructor param: hoisted-norm normalize (the
-            # one-expression form re-evaluates the norm fold per
-            # ELEMENT — O(dim²) interpreted, paid TWICE via the v1/v2
-            # verify joins) with the unrolled codegen norm
+            # hoisted-norm normalize (the one-expression form
+            # re-evaluates the norm fold per ELEMENT — O(dim²)
+            # interpreted, paid TWICE via the v1/v2 verify joins)
             normed = V.l2_normalize_select(
                 df.select(F.col(self.id_col).alias("id"),
                           F.col(self.vec_col).alias("__rv")),
                 "id", "__rv", "v",
-                dim=V.maybe_dim(self.dim),
             )
             planes = _hyperplanes(self.dim, n_tables * bits_per_table, self.seed)
         # Join key is (table, signature): pure integer equi-join,
@@ -1326,10 +1323,6 @@ class MMRRerank(Component):
             .select("__q", "__c", "__rel", "__v", "__n")
             .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
         )
-        # probe off the persisted candidate frame (materializes the
-        # cache the self-join needs anyway): per-pair dot unrolls to a
-        # codegen chain instead of the interpreted HOF fold
-        dim = V.probe_dim(cv, "__v")
         a, b = cv.alias("a"), cv.alias("b")
         pairs = a.join(
             b,
@@ -1339,7 +1332,7 @@ class MMRRerank(Component):
             F.col("a.__c").alias("ca"),
             F.col("b.__c").alias("cb"),
             F.round(
-                V.dot(F.col("a.__v"), F.col("b.__v"), dim=dim)
+                V.dot(F.col("a.__v"), F.col("b.__v"))
                 / (F.col("a.__n") * F.col("b.__n")),
                 6,
             ).alias("s"),

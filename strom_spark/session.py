@@ -39,12 +39,34 @@ def use_state_store(spark: SparkSession, kind: str = "rocksdb") -> None:
         raise ValueError(f"state store must be 'rocksdb' or 'memory', got {kind!r}")
 
 
+#: directory that holds the ``strom_spark`` package — shipped to the
+#: Python workers so operator UDFs import it from any working directory
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def local_cpus() -> int:
+    """Core count for ``local[N]``: ``SPARK_GRAFT_CPUS`` when it is a
+    positive integer, else ``os.cpu_count()`` (a malformed value falls
+    back instead of raising)."""
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        n = 0
+    return n if n > 0 else (os.cpu_count() or 4)
+
+
+def _worker_pythonpath() -> str:
+    """``PACKAGE_ROOT`` first, then the inherited ``PYTHONPATH`` entries."""
+    inherited = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return os.pathsep.join(dict.fromkeys(p for p in [PACKAGE_ROOT, *inherited] if p))
+
+
 def get_spark(
     app_name: str = "strom_spark",
     shuffle_partitions: int | None = None,
     state_store: str | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     if state_store is None:
@@ -56,6 +78,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # the reference's `chunk` knob (events per processing batch,
         # lib/gen_mix.ex:7): Arrow rows per batch through Python UDFs;

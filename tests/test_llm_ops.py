@@ -2412,11 +2412,58 @@ def test_triangle_count_hand_computed(spark):
     assert TriangleCount("e", "t")(Flow({"e": path}))["t"].count() == 0
 
 
+def _wedge_triangle_counts(edges):
+    """Reference triangle counts by the wedge self-join: canonical
+    undirected edges, (degree, id) orientation, wedges at each apex
+    ordered by (db, b), closed by an (x, y) equi-join against the
+    oriented edges.  Each triangle is found once, at its lowest apex;
+    every vertex of it is credited 1."""
+    und = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
+        .distinct()
+    )
+    deg = (
+        und.select(F.explode(F.array("u", "v")).alias("n"))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    withdeg = und.join(
+        deg.withColumnRenamed("n", "u").withColumnRenamed("d", "du"), "u"
+    ).join(deg.withColumnRenamed("n", "v").withColumnRenamed("d", "dv"), "v")
+    fwd = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    ori = withdeg.select(
+        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
+        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
+        F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
+    )
+    e1, e2 = ori.alias("e1"), ori.alias("e2")
+    wedges = e1.join(
+        e2,
+        (F.col("e1.a") == F.col("e2.a"))
+        & (
+            (F.col("e1.db") < F.col("e2.db"))
+            | ((F.col("e1.db") == F.col("e2.db")) & (F.col("e1.b") < F.col("e2.b")))
+        ),
+    ).select(
+        F.col("e1.a").alias("apex"), F.col("e1.b").alias("x"), F.col("e2.b").alias("y")
+    )
+    closing = ori.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    tris = wedges.join(closing, ["x", "y"])
+    return (
+        tris.select(F.explode(F.array("apex", "x", "y")).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
+    )
+
+
 def test_triangle_count_adj_wedge_bit_identity(spark):
-    """The r15 adjacency-intersect closure and the pre-r15 wedge
-    self-join must produce the IDENTICAL (node, count) set — same
-    triangles found once each, same integer credit multiset — on a
-    seeded random multigraph with duplicate edges, reversed
+    """TriangleCount's adjacency-intersect closure and the wedge
+    self-join reference must produce the IDENTICAL (node, count) set —
+    same triangles found once each, same integer credit multiset — on
+    a seeded random multigraph with duplicate edges, reversed
     duplicates, self-loops, hubs, and dangling nodes."""
     import random
 
@@ -2427,20 +2474,11 @@ def test_triangle_count_adj_wedge_bit_identity(spark):
     rows += [(0, i) for i in range(1, 30)]  # hub
     rows += [(7, 7), (3, 3)]  # self loops
     edges = spark.createDataFrame(rows, "src bigint, dst bigint")
-    old = TriangleCount._CLOSURE
-    try:
-        TriangleCount._CLOSURE = "adj"
-        a = {
-            r.node: r.n_triangles
-            for r in TriangleCount("e", "t")(Flow({"e": edges}))["t"].collect()
-        }
-        TriangleCount._CLOSURE = "wedge"
-        w = {
-            r.node: r.n_triangles
-            for r in TriangleCount("e", "t")(Flow({"e": edges}))["t"].collect()
-        }
-    finally:
-        TriangleCount._CLOSURE = old
+    a = {
+        r.node: r.n_triangles
+        for r in TriangleCount("e", "t")(Flow({"e": edges}))["t"].collect()
+    }
+    w = {r.node: r.n_triangles for r in _wedge_triangle_counts(edges).collect()}
     assert a == w and len(a) > 10
 
 
@@ -2808,6 +2846,13 @@ def test_pagerank_requires_batch(spark):
         PageRank("e", "pr")(Flow({"e": stream}))
 
 
+def _knn_plan_rows(corpus, queries):
+    """(executed plan text, sorted rows) of a CosineTopK run."""
+    out = CosineTopK("c", "q", "o", k=10)(Flow({"c": corpus, "q": queries}))["o"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    return plan, sorted(tuple(r) for r in out.collect())
+
+
 def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
     """r14 Arrow kernels: CosineTopK's broadcast-matrix mapInArrow scan
     and vectors.fold_dot_pairs must be BIT-identical to the JVM HOF
@@ -2816,7 +2861,6 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
     elements (poisoned running sum -> null), empty vectors (fold seed
     0.0), and -0.0 products (the +0.0 fold seed makes the first
     -0.0 product round to +0.0)."""
-    from strom_spark import CosineTopK, Flow
     from strom_spark.functions import vectors as V
 
     df = spark.createDataFrame(
@@ -2832,25 +2876,16 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
     )
     q = df.filter(F.col("vec_id") < 3)
 
-    def knn_rows():
-        out = CosineTopK("c", "q", "o", k=10)(Flow({"c": df, "q": q}))["o"]
-        return sorted(tuple(r) for r in out.collect())
-
-    monkeypatch.setenv("STROM_SPARK_ARROW_PAIRS", "0")
-    jvm = knn_rows()
-    monkeypatch.setenv("STROM_SPARK_ARROW_PAIRS", "1")
-    arrow = knn_rows()
-    assert arrow == jvm and len(jvm) > 0
-
-    # r15 byte guard (verdict #9): with a 1-byte tile cap the Arrow
-    # scan must bail to the JVM broadcast path — identical rows, and
-    # the executed plan carries no MapInArrow node
+    # the JVM broadcast-join scan is reached through the byte guard: a
+    # 1-byte tile cap sends every query tile there, and its executed
+    # plan carries no MapInArrow node
     monkeypatch.setenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", "1")
-    out_capped = CosineTopK("c", "q", "o", k=10)(Flow({"c": df, "q": q}))["o"]
-    plan_capped = out_capped._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan_capped
-    assert sorted(tuple(r) for r in out_capped.collect()) == jvm
+    jvm_plan, jvm = _knn_plan_rows(df, q)
     monkeypatch.delenv("STROM_SPARK_ARROW_TILE_MAX_BYTES")
+    assert "MapInArrow" not in jvm_plan
+    arrow_plan, arrow = _knn_plan_rows(df, q)
+    assert "MapInArrow" in arrow_plan
+    assert arrow == jvm and len(jvm) > 0
 
     # fold_dot_pairs on a joined pair frame vs the JVM fold expression
     a, b = df.alias("a"), df.alias("b")
@@ -2876,3 +2911,21 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
         assert (x is None) == (y is None)
         if x is not None:
             assert math.copysign(1.0, x) == math.copysign(1.0, y)
+
+
+def test_arrow_tile_guard_sizes_by_longest_query(spark, monkeypatch):
+    """The Arrow tile byte guard sizes a ragged query tile by its
+    LONGEST vector: a short first row must not let a tile whose wide
+    rows exceed the cap onto the Arrow path.  3 queries, first of dim 2
+    (3 x 2 x 8 = 48 B) then dim 64 (3 x 64 x 8 = 1536 B), cap 500 B."""
+    rows = [(0, [0.5, 0.25])] + [
+        (i, [float((i * 7 + j) % 11) - 5.0 for j in range(64)]) for i in range(1, 6)
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    q = spark.createDataFrame(rows[:3], "vec_id bigint, embedding array<double>")
+    monkeypatch.setenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", "1")
+    _, jvm = _knn_plan_rows(df, q)
+    monkeypatch.setenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", "500")
+    plan, got = _knn_plan_rows(df, q)
+    assert "MapInArrow" not in plan
+    assert got == jvm and len(jvm) > 0
