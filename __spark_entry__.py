@@ -1152,15 +1152,17 @@ def _unrolled_simhash_cc(rounds: int) -> str:
     bipartite buckets — the BOUNDED replacement (round 8) for the
     recursive-CTE transitive closure that stalled DuckDB at sf0.1:
     the recursion materialized the DISTINCT doc-doc edge set, which is
-    O(cluster²) in duplicate-heavy buckets.  Each unrolled round here
-    replays EXACTLY one engine iteration (dedup.py:SimHashDedup):
+    O(cluster²) in duplicate-heavy buckets.  Each unrolled round is
     bucket min → doc neighbor-min → least() step → pointer jump
     (lab := min(lab, lab[lab])) — four bounded joins over doc-block
     rows, never a pair join.  With pointer jumping the label-chain
     depth halves per round, so `rounds` unrolled rounds converge for
-    any component of pointer depth ≤ 2^rounds — the fixpoint (every
-    node labelled with its component minimum) is unique, so matching
-    the engine needs only convergence, not matched iteration counts.
+    any component of pointer depth ≤ 2^rounds.  The engine
+    (dedup.py:SimHashDedup) takes another route to the same graph:
+    star edges from every bucket member to the bucket's minimum id,
+    clustered by ConnectedComponents.  The fixpoint (every node
+    labelled with its component minimum) is unique, so matching the
+    engine needs only convergence, not matched iteration counts.
 
     Every CTE is MATERIALIZED: DuckDB inlines plain CTEs at each
     reference site, and with two references per round the inlining is
@@ -1211,10 +1213,10 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation over simhash block buckets — linear state, NO pair
     materialization (pairs are O(cluster²): measured 98M pairs on a
     50k-doc 10×-duplicated corpus; this outputs 50k rows).  The oracle
-    replays the engine's own iteration (neighbor-min + pointer jump)
-    as 8 unrolled bounded CTE rounds — see _unrolled_simhash_cc; the
-    previous recursive-CTE closure was all-pairs inside buckets and
-    stalled DuckDB at sf0.1."""
+    runs min-label propagation with pointer jumping over the same
+    buckets as 8 unrolled bounded CTE rounds — see
+    _unrolled_simhash_cc; the previous recursive-CTE closure was
+    all-pairs inside buckets and stalled DuckDB at sf0.1."""
     flow = Flow({"docs": load_table(spark, sf_dir, "documents")})
     return SimHashDedup("docs", "keep", max_distance=4)(flow)["keep"]
 

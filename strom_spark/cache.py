@@ -3,7 +3,7 @@
 Several operators persist an intermediate (MEMORY_AND_DISK) because a
 sizing count or a multi-consumer plan would otherwise recompute an
 expensive upstream (CosineLSHJoin / MinHashLSHPairs / SemDeDup auto
-modes, SimHashDedup's partitioned edge copies).  They must NOT
+modes, ConnectedComponents' partitioned edge table).  They must NOT
 unpersist eagerly: the operator's output is a lazy plan reading the
 cache, and an unpersist before the caller materializes it would force
 the recompute straight back in.

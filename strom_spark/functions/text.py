@@ -568,8 +568,7 @@ def gopher_repetition_stats(
     unpinned), which at 100 TB means re-reading the corpus eight
     times.  Below the bound the recomputation is cheaper than cache
     materialization (measured on the 5k-doc benchmark corpus: 0.96 s
-    unpinned vs 2.9-3.5 s pinned — the SimHashDedup adaptive-persist
-    tradeoff, same resolution).  ``n_rows`` is an optional row-count
+    unpinned vs 2.9-3.5 s pinned).  ``n_rows`` is an optional row-count
     hint: when given, no counting pass runs at all; when None, the
     slim (__id, text) projection is persisted and ITS count doubles
     as cache materialization for the three branches that consume it

@@ -44,7 +44,7 @@ from ..flow import Flow
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..io import spread as _spread
-from ..planprobe import probe_loop_plan
+from .similarity import _lloyd_sample
 
 
 class ExactDedup(Component):
@@ -718,11 +718,12 @@ class MinHashDedup(Component):
     O(cluster²) for a cluster of c mutual near-dups.  For corpora with
     pathological duplication (thousands of identical copies), run
     :class:`ExactDedup` first to collapse identical docs, or use
-    :class:`SimHashDedup` (label propagation over buckets, never
+    :class:`SimHashDedup` (one star edge per doc and bucket, never
     materializes pairs).
 
     Components come from :class:`~strom_spark.operators.graph.
-    ConnectedComponents` min-label propagation: per round the static
+    ConnectedComponents` min-label propagation — the same loop
+    SimHashDedup clusters through: per round the static
     symmetric edge table is persisted partitioned on the join key and
     only node-sized label state shuffles; pointer jumping converges in
     O(log diameter) rounds (near-dup components are shallow — the
@@ -876,6 +877,28 @@ def _validate_simhash_blocks(max_distance: int, bits: int) -> None:
         )
 
 
+def _simhash_block_bits(sig_col, i: int, bits: int, n_blocks: int):
+    """Bits of pigeonhole block ``i`` of a ``bits``-bit packed
+    signature: block i covers bits [i*width, i*width+L) from the MSB;
+    the last block takes the remainder."""
+    width = bits // n_blocks
+    length = width if i < n_blocks - 1 else bits - width * (n_blocks - 1)
+    shift = bits - i * width - length
+    return F.shiftrightunsigned(sig_col, shift).bitwiseAND(F.lit((1 << length) - 1))
+
+
+def _simhash_block_keys(sig_col, bits: int, n_blocks: int):
+    """Array of the ``n_blocks`` bucket keys of a signature: (block
+    bits, block index) encoded in ONE long — integer shuffle key +
+    codegen'd equi-join, no string concat."""
+    return F.array(
+        *[
+            F.shiftleft(_simhash_block_bits(sig_col, i, bits, n_blocks), 4) + F.lit(i)
+            for i in range(n_blocks)
+        ]
+    )
+
+
 class SimHash(Component):
     """Per-document 32-bit SimHash bit-string: (id, simhash)."""
 
@@ -950,23 +973,12 @@ class SimHashPairs(Component):
             .transform(_track)
         )
         n_blocks = self.max_distance + 1
-        width = bits // n_blocks
-        # block i covers bits [i*width, i*width+L) from the MSB; the
-        # last block takes the remainder.  Encode (block bits, block
-        # index) in ONE long join key: integer shuffle key + codegen'd
-        # equi-join, no string concat.
-        def block_bits(sig_col, i: int):
-            length = width if i < n_blocks - 1 else bits - width * (n_blocks - 1)
-            shift = bits - i * width - length
-            return F.shiftrightunsigned(sig_col, shift).bitwiseAND(F.lit((1 << length) - 1))
-
-        def block_key(i: int):
-            return F.shiftleft(block_bits(F.col("sig"), i), 4) + F.lit(i)
-
         bucketed = sig.select(
             "id",
             "sig",
-            F.posexplode(F.array(*[block_key(i) for i in range(n_blocks)])).alias("bi", "bk"),
+            F.posexplode(_simhash_block_keys(F.col("sig"), bits, n_blocks)).alias(
+                "bi", "bk"
+            ),
         )
         a, b = bucketed.alias("a"), bucketed.alias("b")
         # hamming = popcount(xor) rides the join projection (pure
@@ -980,7 +992,10 @@ class SimHashPairs(Component):
         for j in range(n_blocks - 1):
             first_match = first_match & (
                 (F.lit(j) >= F.col("a.bi"))
-                | (block_bits(F.col("a.sig"), j) != block_bits(F.col("b.sig"), j))
+                | (
+                    _simhash_block_bits(F.col("a.sig"), j, bits, n_blocks)
+                    != _simhash_block_bits(F.col("b.sig"), j, bits, n_blocks)
+                )
             )
         out = (
             a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
@@ -1008,12 +1023,16 @@ class SimHashDedup(Component):
 
     Why not SimHashPairs + group?  With heavy duplication the pair set
     is O(cluster²) — measured: 50k docs with 10× duplication produce
-    ~98M pairs.  Dedup only needs the component representative, so this
-    operator propagates min-labels over the bipartite doc→block-bucket
-    graph to a fixpoint: per iteration two hash-shuffles (bucket min,
-    doc min), state linear in docs+buckets, pairs never materialized.
-    Driver-side fixpoint loop = the reference's Loop pattern
-    (``lib/loop.ex``, SURVEY §7.3) with lineage truncated per round.
+    ~98M pairs.  Dedup only needs the component representative, so
+    each block bucket becomes a STAR instead: every member points to
+    the bucket's minimum id (one ``min(id)`` window over the bucket
+    key), so the edge count is docs × blocks, never pairs.  The stars
+    keep the doc↔bucket graph's components, and
+    :class:`~strom_spark.operators.graph.ConnectedComponents` labels
+    them with their minimum doc id (min-label propagation with pointer
+    jumping, O(log n) rounds; it raises if ``max_iterations`` rounds
+    do not reach the fixpoint).  Doc ids must be integral, as
+    ConnectedComponents requires.
 
     Semantics: components of the *bucket* graph — a superset of the
     hamming<=d graph (pigeonhole guarantees every true near-dup pair
@@ -1032,7 +1051,6 @@ class SimHashDedup(Component):
         max_distance: int = 3,
         bits: int = 32,
         max_iterations: int = 15,
-        partition_persist_min_rows: int = 5_000_000,
         label: str | None = None,
     ):
         _validate_simhash_blocks(max_distance, bits)
@@ -1043,79 +1061,26 @@ class SimHashDedup(Component):
         self.max_distance = max_distance
         self.bits = bits
         self.max_iterations = max_iterations
-        self.partition_persist_min_rows = int(partition_persist_min_rows)
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
-        df = flow[self.input]
-        bits = self.bits
-        sig = _simhash_sig_int(df, self.id_col, self.text_col, bits)
+        from pyspark.sql import Window
+
+        from .graph import ConnectedComponents
+
+        sig = _simhash_sig_int(flow[self.input], self.id_col, self.text_col, self.bits)
         n_blocks = self.max_distance + 1
-        width = bits // n_blocks
-
-        def block_key(i: int):
-            length = width if i < n_blocks - 1 else bits - width * (n_blocks - 1)
-            shift = bits - i * width - length
-            b = F.shiftrightunsigned(F.col("sig"), shift).bitwiseAND(F.lit((1 << length) - 1))
-            return F.shiftleft(b, 4) + F.lit(i)
-
-        from pyspark import StorageLevel
-
-        edges = sig.select(
-            "id", F.explode(F.array(*[block_key(i) for i in range(n_blocks)])).alias("bk")
+        members = sig.select(
+            "id", F.explode(_simhash_block_keys(F.col("sig"), self.bits, n_blocks)).alias("bk")
         )
-        probe_loop_plan("SimHashDedup/setup", edges)
-        # the doc→block edge table is STATIC and each round joins it
-        # TWICE on different keys (labels on id, bucket minima on bk).
-        # Above `partition_persist_min_rows` keep one persisted copy
-        # PARTITIONED PER JOIN KEY so neither round join re-shuffles
-        # the edge table (the PageRank static-adjacency discipline,
-        # round 8; a localCheckpoint reports unknown partitioning and
-        # re-exchanged the edges every round).  Below the bound the
-        # edge table is broadcast-sized anyway — AQE broadcasts it in
-        # the round joins and the two persist materializations are
-        # pure setup overhead (measured +1.6 s on the 25k-edge sf0.1
-        # corpus), so the plain checkpointed table serves both roles.
-        # The checkpoint FIRST either way: the upstream simhash
-        # signature pipeline is the expensive part, and independent
-        # persists would each recompute it at materialization
-        # (measured 2.3× on dedup_simhash_clusters at sf0.1);
-        # repartitioning the checkpointed RDD pays one slim shuffle
-        # per copy instead.
-        edges = edges.localCheckpoint(eager=True)
-        if edges.count() >= self.partition_persist_min_rows:
-            edges_by_id = _track(
-                edges.repartition("id").persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            edges_by_bk = _track(
-                edges.repartition("bk").persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        else:
-            edges_by_id = edges_by_bk = edges
-        labels = (
-            edges_by_id.select("id").distinct().select("id", F.col("id").alias("lab"))
+        star = members.select(
+            F.col("id").alias("src"),
+            F.min("id").over(Window.partitionBy("bk")).alias("dst"),
         )
-        # labels only ever decrease, so sum(lab) is a monotone potential:
-        # unchanged sum == fixpoint.  One tiny agg per round instead of a
-        # join+count change detector.
-        prev_sum = None
-        for _ in range(self.max_iterations):
-            bmin = edges_by_id.join(labels, "id").groupBy("bk").agg(
-                F.min("lab").alias("bmin")
-            )
-            doc_min = edges_by_bk.join(bmin, "bk").groupBy("id").agg(
-                F.min("bmin").alias("nlab")
-            )
-            labels = labels.join(doc_min, "id", "left").select(
-                "id", F.least("lab", F.coalesce("nlab", "lab")).alias("lab")
-            )
-            probe_loop_plan("SimHashDedup/round", labels)
-            labels = labels.localCheckpoint(eager=True)  # truncate lineage per round
-            cur_sum = labels.agg(F.sum("lab")).collect()[0][0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        out = labels.select(F.col("id"), F.col("lab").alias("keep_id"))
+        comp = ConnectedComponents(
+            "__edges", "__cc", max_iterations=self.max_iterations
+        )(Flow({"__edges": star}))["__cc"]
+        out = comp.select(F.col("node").alias("id"), F.col("component").alias("keep_id"))
         return flow.without(self.input).with_stream(self.output, out)
 
     def input_names(self) -> Sequence[str]:
@@ -1129,9 +1094,9 @@ class EmbeddingNearDupPairs(Component):
     """Cosine near-duplicate pairs over an embedding column — exact
     all-pairs via blocked matrix multiply.
 
-    Strategy ``gemm`` (default): one side is collected+broadcast as a
-    normalized float64 matrix; ``mapInPandas`` streams corpus blocks and
-    computes block × matrixᵀ with numpy GEMM — vectorized, no pair
+    One side is collected+broadcast as a normalized float64 matrix;
+    ``mapInPandas`` streams corpus blocks and computes block × matrixᵀ
+    with numpy GEMM — vectorized, no pair
     materialization, linear scan of the corpus.
 
     The broadcast side is GUARDED: a cheap count first, and above
@@ -1151,11 +1116,6 @@ class EmbeddingNearDupPairs(Component):
     replayable in portable mode) or ``SemDeDup`` (cluster-blocked)
     above the bound.  Pass ``on_overflow='tile'`` explicitly to accept
     the quadratic cost (recall-measurement runs, bounded backfills).
-
-    Strategy ``join``: pure-plan self-join with JVM fold dot product —
-    no driver collection, but interpreted HOFs make it ~10× slower per
-    pair; useful when the input is a lazy/streaming plan that must not
-    be collected at build time.
     """
 
     def __init__(
@@ -1166,13 +1126,10 @@ class EmbeddingNearDupPairs(Component):
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         threshold: float = 0.95,
-        strategy: str = "gemm",
         max_broadcast_rows: int = 2_000_000,
         on_overflow: str = "error",
         label: str | None = None,
     ):
-        if strategy not in ("gemm", "join"):
-            raise ValueError("strategy must be 'gemm' or 'join'")
         if on_overflow not in ("tile", "error"):
             raise ValueError("on_overflow must be 'tile' or 'error'")
         self.input = input
@@ -1180,7 +1137,6 @@ class EmbeddingNearDupPairs(Component):
         self.id_col = id_col
         self.vec_col = vec_col
         self.threshold = threshold
-        self.strategy = strategy
         self.max_broadcast_rows = max_broadcast_rows
         self.on_overflow = on_overflow
         self.label = label
@@ -1256,28 +1212,9 @@ class EmbeddingNearDupPairs(Component):
         ]
         return reduce(lambda a, b: a.unionAll(b), parts)
 
-    def _join(self, df: DataFrame) -> DataFrame:
-        # hoisted-norm normalize: the norm is computed once per row,
-        # not once per element inside the transform lambda
-        normed = V.l2_normalize_select(
-            df.select(F.col(self.id_col).alias("id"),
-                      F.col(self.vec_col).alias("__rv")),
-            "id", "__rv", "v",
-        )
-        a, b = normed.alias("a"), normed.alias("b")
-        return (
-            a.join(b, F.col("a.id") < F.col("b.id"))
-            .withColumn(
-                "cosine", F.round(V.dot(F.col("a.v"), F.col("b.v")), 6)
-            )
-            .filter(F.col("cosine") >= self.threshold)
-            .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"), "cosine")
-        )
-
     def transform(self, flow: Flow) -> Flow:
         df = flow[self.input]
-        out = self._gemm(df) if self.strategy == "gemm" else self._join(df)
-        return flow.without(self.input).with_stream(self.output, out)
+        return flow.without(self.input).with_stream(self.output, self._gemm(df))
 
     def input_names(self) -> Sequence[str]:
         return (self.input,)
@@ -2236,18 +2173,7 @@ class SemDeDup(Component):
         )
         if sample.empty:
             raise ValueError("SemDeDup: input has no vectors")
-        X = np.stack(sample["v"].to_list()).astype("float64")
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        rng = np.random.default_rng(self.seed)
-        k = min(k, len(X))
-        C = X[rng.choice(len(X), size=k, replace=False)]
-        for _ in range(self.iters):
-            assign = np.argmax(X @ C.T, axis=1)
-            for j in range(k):
-                members = X[assign == j]
-                if len(members):
-                    c = members.mean(axis=0)
-                    C[j] = c / max(float(np.linalg.norm(c)), 1e-30)
+        C = _lloyd_sample(sample["v"].to_list(), k, self.iters, self.seed)
         bc = slim.sparkSession.sparkContext.broadcast(C)
 
         def assign_batches(batches):

@@ -3,9 +3,10 @@
 The reference's Loop origin (``lib/loop.ex``; SURVEY §7.3) expresses
 cyclic dataflow but ships no graph algorithms; connected components is
 THE graph primitive a dedup pipeline needs (near-dup pair graph →
-cluster representative).  ``SimHashDedup`` inlines a bipartite variant
-of this; ``ConnectedComponents`` is the general form over any
-``(src, dst)`` edge list, so LSH/embedding/winnowing pair outputs can
+cluster representative).  ``ConnectedComponents`` is the one
+driver-side fixpoint loop the dedup family runs: ``MinHashDedup``
+feeds it the verified pair graph, ``SimHashDedup`` the star edges of
+its simhash block buckets, and LSH/embedding/winnowing pair outputs can
 all be clustered with the same operator.
 
 Algorithm: min-label propagation with POINTER JUMPING.  Each round
@@ -21,12 +22,13 @@ does
 
 Labels only decrease and only to reachable node ids, so at fixpoint
 both endpoints of every edge agree and every component carries its
-minimum node id.  ``sum(lab)`` is a monotone potential: an unchanged
-sum IS the fixpoint, detected with one scalar agg per round (no
-join+count change detector).  State is one row per node; pairs beyond
-the input edges are never materialized.  Lineage is truncated per
-round with ``localCheckpoint`` (driver fixpoint loop = the reference's
-Loop pattern).
+minimum node id.  The fixpoint is detected by the FRONTIER (the labels
+that changed this round) coming up empty — one count per round on the
+just-checkpointed state; a loop that runs out of ``max_iterations``
+with a non-empty frontier raises instead of returning partial labels.
+State is one row per node; pairs beyond the input edges are never
+materialized.  Lineage is truncated per round with ``localCheckpoint``
+(driver fixpoint loop = the reference's Loop pattern).
 """
 
 from __future__ import annotations
@@ -47,7 +49,8 @@ class ConnectedComponents(Component):
     row per node appearing in an edge, ``component_col`` = the minimum
     node id of the node's connected component.  Isolated nodes (no
     edges) are their own representatives and can be unioned in by the
-    caller if needed.
+    caller if needed.  Raises ``ValueError`` when ``max_iterations``
+    rounds end before the labels reach their fixpoint.
     """
 
     def __init__(
@@ -67,6 +70,8 @@ class ConnectedComponents(Component):
         self.src, self.dst = src, dst
         self.node_col, self.component_col = node_col, component_col
         self.max_iterations = int(max_iterations)
+        if self.max_iterations < 1:
+            raise ValueError("max_iterations must be >= 1")
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
@@ -76,9 +81,9 @@ class ConnectedComponents(Component):
         for c in (self.src, self.dst):
             if dtypes.get(c) not in numeric:
                 raise ValueError(
-                    f"node ids must be integral for the sum-potential fixpoint "
-                    f"detector; column {c!r} is {dtypes.get(c)} — hash or "
-                    "dense-rank string ids to longs first"
+                    f"node ids must be integral; column {c!r} is "
+                    f"{dtypes.get(c)} — hash or dense-rank string ids to "
+                    "longs first"
                 )
         from pyspark import StorageLevel
 
@@ -146,6 +151,12 @@ class ConnectedComponents(Component):
             labels = labels.select("a", "lab")
             if n_changed == 0:
                 break
+        else:
+            raise ValueError(
+                f"ConnectedComponents did not converge in max_iterations="
+                f"{self.max_iterations} rounds ({n_changed} labels still "
+                "changing); raise max_iterations"
+            )
         out = labels.select(
             F.col("a").alias(self.node_col), F.col("lab").alias(self.component_col)
         )

@@ -50,6 +50,29 @@ _TRAIN_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
 )
 
 
+def _lloyd_sample(vectors, k: int, iters: int, seed: int) -> np.ndarray:
+    """Spherical k-means (Lloyd) on a driver-side sample: rows are
+    L2-normalized, ``min(k, len(sample))`` seeds are drawn without
+    replacement by ``default_rng(seed)``, then ``iters`` rounds of
+    argmax-cosine assignment + renormalized member mean (an empty
+    cluster keeps its centroid).  Returns the (k, dim) centroid matrix.
+    Shared by IVFTopK and SemDeDup; each caller draws its own bounded,
+    deterministic sample."""
+    X = np.stack(vectors).astype("float64")
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    rng = np.random.default_rng(seed)
+    k = min(k, len(X))
+    C = X[rng.choice(len(X), size=k, replace=False)]
+    for _ in range(iters):
+        assign = np.argmax(X @ C.T, axis=1)
+        for j in range(k):
+            members = X[assign == j]
+            if len(members):
+                c = members.mean(axis=0)
+                C[j] = c / max(np.linalg.norm(c), 1e-30)
+    return C
+
+
 class CosineTopK(Component):
     """Exact top-k nearest neighbors (cosine) for each query vector.
 
@@ -451,30 +474,18 @@ class IVFTopK(Component):
             .limit(self.sample_size)
             .toPandas()
         )
-        X = np.stack(sample["v"].to_list()).astype("float64")
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        rng = np.random.default_rng(self.seed)
-        k = min(n_centroids, len(X))
-        C = X[rng.choice(len(X), size=k, replace=False)]
-        for _ in range(self.iters):
-            assign = np.argmax(X @ C.T, axis=1)
-            for j in range(k):
-                members = X[assign == j]
-                if len(members):
-                    c = members.mean(axis=0)
-                    C[j] = c / max(np.linalg.norm(c), 1e-30)
+        C = _lloyd_sample(sample["v"].to_list(), n_centroids, self.iters, self.seed)
         per_df[key] = C
         return C
 
-    def transform(self, flow: Flow) -> Flow:
+    def _assign(self, corpus: DataFrame, C: np.ndarray) -> DataFrame:
+        """(neighbor_id, centroid_id, nv): one linear mapInPandas scan
+        assigns every corpus vector to its nearest centroid (batch GEMM
+        against the broadcast centroid matrix).  Shared by IVFTopK and
+        IVFIndex."""
         import pandas as pd
 
-        corpus = flow[self.input]
-        n_centroids, n_probe = self._resolve(corpus)
-        C = self._train(corpus, n_centroids)
-        spark = corpus.sparkSession
-        bc = spark.sparkContext.broadcast(C)
-
+        bc = corpus.sparkSession.sparkContext.broadcast(C)
         slim = corpus.select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(self.vec_col).cast("array<double>").alias("v"),
@@ -500,10 +511,16 @@ class IVFTopK(Component):
                     }
                 )
 
-        assigned = slim.mapInPandas(
+        return slim.mapInPandas(
             assign,
             schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
-        ).withColumn("nn", V.norm("nv"))
+        )
+
+    def transform(self, flow: Flow) -> Flow:
+        corpus = flow[self.input]
+        n_centroids, n_probe = self._resolve(corpus)
+        C = self._train(corpus, n_centroids)
+        assigned = self._assign(corpus, C).withColumn("nn", V.norm("nv"))
 
         probe_df = _probe_assign(
             flow[self.queries], C, n_probe, self.id_col, self.vec_col
@@ -561,8 +578,6 @@ class IVFIndex(Component):
     def transform(self, flow: Flow) -> Flow:
         import json
 
-        import pandas as pd
-
         corpus = flow[self.input]
         trainer = IVFTopK(
             "c",
@@ -577,34 +592,9 @@ class IVFIndex(Component):
         )
         n_centroids, _ = trainer._resolve(corpus)
         C = trainer._train(corpus, n_centroids)
-        bc = corpus.sparkSession.sparkContext.broadcast(C)
-        slim = corpus.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).cast("array<double>").alias("v"),
-        )
-        nid_type = slim.schema["neighbor_id"].dataType.simpleString()
-
-        def assign(batches):
-            M = bc.value
-            for batch in batches:
-                if not len(batch):
-                    continue
-                B = np.stack(batch["v"].to_list()).astype("float64")
-                B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-30)
-                # store the RAW vector: the search-time rerank computes
-                # dot/(qn*nn) JVM-side (CosineTopK's exact sequence)
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": batch["neighbor_id"],
-                        "centroid_id": np.argmax(B @ M.T, axis=1).astype("int32"),
-                        "nv": list(batch["v"]),
-                    }
-                )
-
-        assigned = slim.mapInPandas(
-            assign,
-            schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
-        )
+        # the RAW vector is stored: the search-time rerank computes
+        # dot/(qn*nn) JVM-side (CosineTopK's exact sequence)
+        assigned = trainer._assign(corpus, C)
         # r15 (guide §6): repartition ON the write-partition key first.
         # A dynamic-partition write without it has every upstream task
         # write one file per centroid it holds — tasks × centroids tiny

@@ -164,31 +164,6 @@ def test_simhash_and_pairs(docs):
         assert r.hamming <= 3 and r.d1 < r.d2
 
 
-def test_simhash_dedup_partitioned_persist_path_identical(docs):
-    """The >= partition_persist_min_rows branch (two join-key-
-    partitioned persisted edge copies — the 100 TB shuffle-regime
-    path) must produce bit-identical clusters to the small-corpus
-    checkpoint-only branch AQE broadcast-serves."""
-    from strom_spark.operators.dedup import SimHashDedup
-
-    small = docs.limit(200)
-    base = (
-        SimHashDedup("d", "o", max_distance=4)(Flow({"d": small}))["o"]
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    forced = (
-        SimHashDedup(
-            "d", "o", max_distance=4, partition_persist_min_rows=1
-        )(Flow({"d": small}))["o"]
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    assert base.equals(forced)
-
-
 def test_embedding_near_dup_and_lsh(emb):
     flow = Flow({"emb": emb})
     exact = EmbeddingNearDupPairs("emb", "p", threshold=0.3)(flow)["p"]
@@ -1019,7 +994,8 @@ def test_tfidf_top_terms_ranking(spark):
 def test_connected_components_differential(spark):
     """ConnectedComponents vs python union-find on a random graph plus
     a 64-node path (exercises pointer jumping: converges well under the
-    30-round cap where pure neighbor-min would need 64)."""
+    30-round cap where pure neighbor-min would need 64), and a capped
+    run that stops before the fixpoint raises."""
     import random
 
     from strom_spark import ConnectedComponents, Flow
@@ -1048,6 +1024,11 @@ def test_connected_components_differential(spark):
     out = ConnectedComponents("e", "cc")(Flow({"e": df}))["cc"]
     got = {r.node: r.component for r in out.collect()}
     assert got == want
+
+    # the path needs more than 3 rounds: a capped run must raise, not
+    # return the path split into partial labels
+    with pytest.raises(ValueError, match="did not converge"):
+        ConnectedComponents("e", "cc", max_iterations=3)(Flow({"e": df}))
 
     with pytest.raises(ValueError, match="integral"):
         ConnectedComponents("e", "cc")(
@@ -2791,9 +2772,13 @@ def test_static_adjacency_no_per_round_edge_shuffle(spark):
         ).distinct()
         with capture_loop_plans() as cap:
             PageRank("e", "pr", iterations=2)(Flow({"e": edges}))["pr"].count()
-            ConnectedComponents("e2", "cc", max_iterations=2)(
-                Flow({"e2": edges})
-            )["cc"].count()
+            # two rounds capture the round body; this graph needs ~14
+            # to converge, so the capped run raises instead of
+            # returning partial labels
+            with pytest.raises(ValueError, match="did not converge"):
+                ConnectedComponents("e2", "cc", max_iterations=2)(
+                    Flow({"e2": edges})
+                )
 
         def cache_scan_feeds_join_unshuffled(body) -> bool:
             """True iff some InMemoryTableScan reaches its SMJ/SHJ with

@@ -184,7 +184,7 @@ def test_global_row_number_matches_single_partition(spark, sf_dir):
 
 
 def test_simhash_dedup_clusters_match_union_find(spark, sf_dir):
-    """SimHashDedup's distributed min-label propagation must equal a
+    """SimHashDedup's distributed clustering must equal a
     driver-side union-find over the same doc/block-bucket edges —
     and emit one row per doc (linear output; pair enumeration is
     O(cluster²) and is exactly what this operator avoids)."""
@@ -223,6 +223,52 @@ def test_simhash_dedup_clusters_match_union_find(spark, sf_dir):
     expected = {i: min(j for j in sigs if find(j) == find(i)) for i in sigs}
     assert got == expected
     assert len(got) == docs.count()
+
+
+def test_simhash_dedup_long_bucket_chain_is_one_cluster(spark, monkeypatch):
+    """A 40-doc chain of shared buckets (doc i shares block 0 with its
+    pair-mate and block 1 with the next pair) is ONE component under
+    union-find.  Propagation that moves the minimum one doc per round
+    needs ~40 rounds, more than the default ``max_iterations``; the
+    clustering must still reach the fixpoint."""
+    from strom_spark.operators import dedup
+
+    n = 40
+    widths = [6, 6, 6, 6, 8]
+    blocks = {i: [i // 2, (i + 1) // 2 + 20, i, i, i] for i in range(n)}
+    sigs = {}
+    for i, bs in blocks.items():
+        sig = 0
+        for b, w in zip(bs, widths):
+            sig = (sig << w) | b
+        sigs[i] = sig
+    sig_df = spark.createDataFrame(list(sigs.items()), "id bigint, sig bigint")
+    monkeypatch.setattr(dedup, "_simhash_sig_int", lambda *a, **k: sig_df)
+
+    out = dedup.SimHashDedup("docs", "keep", max_distance=4)(
+        Flow({"docs": sig_df})
+    )["keep"]
+    got = {r["id"]: r["keep_id"] for r in out.collect()}
+
+    parent = {i: i for i in range(n)}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    buckets = {}
+    for i, bs in blocks.items():
+        for b, bits in enumerate(bs):
+            buckets.setdefault((b, bits), []).append(i)
+    for members in buckets.values():
+        for m in members[1:]:
+            ra, rb = find(members[0]), find(m)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    expected = {i: find(i) for i in range(n)}
+    assert set(expected.values()) == {0}
+    assert got == expected
 
 
 def test_minhash_dedup_matches_union_find_over_verified_pairs(spark, sf_dir):

@@ -185,9 +185,9 @@ def test_no_quadratic_join_sweep(spark, sf_dir):
     plans an unbounded nested-loop join fails here with its plan.
 
     The sweep also audits LOOP-BODY plans: iterative operators
-    (PageRank, ConnectedComponents, SimHashDedup, LloydKMeans,
-    Iterate) truncate lineage per round with localCheckpoint, so the
-    post-loop plan this sweep used to inspect is blind to whatever the
+    (PageRank, ConnectedComponents, LloydKMeans, Iterate; SimHashDedup
+    and MinHashDedup cluster through ConnectedComponents) truncate
+    lineage per round with localCheckpoint, so the post-loop plan this sweep used to inspect is blind to whatever the
     loop body does — a CartesianProduct inside a round would repeat
     every iteration unseen.  capture_loop_plans() records each round's
     pre-truncation DataFrame from the REAL code path; every captured
@@ -324,7 +324,6 @@ def test_no_quadratic_join_sweep(spark, sf_dir):
     for expected in (
         "PageRank/round",
         "ConnectedComponents/round",
-        "SimHashDedup/round",
         "LloydKMeans/round",
         "Iterate/round",
     ):
